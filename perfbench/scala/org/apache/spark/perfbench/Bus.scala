@@ -1,0 +1,11 @@
+package org.apache.spark.perfbench
+
+import org.apache.spark.SparkContext
+
+/** Listener events arrive asynchronously; a counter snapshot taken right
+  * after an action must first let the bus deliver what that action
+  * posted. The bus is package-private to Spark, hence this file's
+  * package. */
+object Bus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
